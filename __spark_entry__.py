@@ -1378,14 +1378,9 @@ def q_embedding_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         mid = emb.agg(F.expr("percentile_approx(vec_id, 0.5)")).collect()[0][0]
         emb.filter(F.col("vec_id") <= mid).coalesce(1).write.parquet(_os.path.join(src_dir, "p0"))
         emb.filter(F.col("vec_id") > mid).coalesce(1).write.parquet(_os.path.join(src_dir, "p1"))
-        from rat_strain_loader_pipeline_spark.streaming import (
-            stream_partition_scope,
+        postings = ivf_ingest_available_now(
+            spark, src_dir + "/p*", cent, work, max_files_per_trigger=1
         )
-
-        with stream_partition_scope(spark):
-            postings = ivf_ingest_available_now(
-                spark, src_dir + "/p*", cent, work, max_files_per_trigger=1
-            )
         postings, p_path = stage_to_parquet_path(postings, "ivfstream-postings")
         # centroids are a deterministic driver-side numpy model — cache
         # the array itself beside the staged posting store
@@ -1576,15 +1571,10 @@ def q_cf2_stream_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="cf2-stream-", dir=_stage_root())
     cf2_dir = f"{work}/cf2"
     write_cf2(cf2.repartition(2), cf2_dir, compression="none")
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    out = ingest_cf2_available_now(
+        spark, cf2_dir, work, sample_id=7, gender="M", map_key=360,
+        genes=genes, genic_bin_size=256, max_files_per_trigger=2,
     )
-
-    with stream_partition_scope(spark):
-        out = ingest_cf2_available_now(
-            spark, cf2_dir, work, sample_id=7, gender="M", map_key=360,
-            genes=genes, genic_bin_size=256, max_files_per_trigger=2,
-        )
     result, path = stage_to_parquet_path(
         out.select(
             "chromosome",
@@ -1642,18 +1632,13 @@ def q_dedup_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.filter(F.col("doc_id") > mid).coalesce(1).write.parquet(
         _os.path.join(src_dir, "p1")
     )
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return dedup_gate_available_now(
+        spark,
+        src_dir + "/p*",
+        work,
+        jaccard_threshold=0.5,
+        max_files_per_trigger=1,
     )
-
-    with stream_partition_scope(spark):
-        return dedup_gate_available_now(
-            spark,
-            src_dir + "/p*",
-            work,
-            jaccard_threshold=0.5,
-            max_files_per_trigger=1,
-        )
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3446,6 +3431,7 @@ def q_events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.streaming import drain_to_memory
     from rat_strain_loader_pipeline_spark.streaming.events import (
         hourly_event_counts,
         stream_events,
@@ -3455,23 +3441,11 @@ def q_events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (ts already nanos->micros normalized by read_table) in one
     src_dir = _os.path.join(_stage_root(), f"events-stream-src-{_uuid.uuid4().hex[:8]}")
     _t(spark, sf_dir, "events").write.parquet(src_dir)
-    ev = stream_events(spark, src_dir)
-    agg = hourly_event_counts(ev)
-    name = f"stream_hourly_{_uuid.uuid4().hex[:8]}"
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return drain_to_memory(
+        hourly_event_counts(stream_events(spark, src_dir)),
+        f"stream_hourly_{_uuid.uuid4().hex[:8]}",
+        "complete",
     )
-
-    with stream_partition_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def q_events_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3497,22 +3471,17 @@ def q_events_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = _os.path.join(_stage_root(), f"asof-stream-{_uuid.uuid4().hex[:8]}")
     src_dir = _os.path.join(work, "src")
     views.repartition(4).write.parquet(src_dir)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return asof_enrich_available_now(
+        spark,
+        src_dir,
+        clicks,
+        on=["user_id"],
+        ts_col="ts",
+        payload={"event_id": "click_event_id", "ts": "click_ts", "value": "click_value"},
+        tiebreak="event_id",
+        work_dir=work,
+        max_files_per_trigger=2,
     )
-
-    with stream_partition_scope(spark):
-        return asof_enrich_available_now(
-            spark,
-            src_dir,
-            clicks,
-            on=["user_id"],
-            ts_col="ts",
-            payload={"event_id": "click_event_id", "ts": "click_ts", "value": "click_value"},
-            tiebreak="event_id",
-            work_dir=work,
-            max_files_per_trigger=2,
-        )
 
 
 def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3527,7 +3496,11 @@ def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
-    from rat_strain_loader_pipeline_spark.streaming.events import sessionize_stateful
+    from rat_strain_loader_pipeline_spark.streaming import drain_to_memory
+    from rat_strain_loader_pipeline_spark.streaming.events import (
+        sessionize_stateful,
+        stream_events,
+    )
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -3545,26 +3518,12 @@ def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _os.path.join(_stage_root(), f"events-sess-src-{_uuid.uuid4().hex[:8]}")
     ev.unionByName(sentinels).write.parquet(src_dir)
 
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(src_dir)
-    out = sessionize_stateful(stream, gap_seconds=1800, watermark="2 hours")
-    name = f"stream_sessions_{_uuid.uuid4().hex[:8]}"
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    out = sessionize_stateful(
+        stream_events(spark, src_dir), gap_seconds=1800, watermark="2 hours"
     )
-
-    with stream_partition_scope(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _os.path.join(_stage_root(), f"ckpt-{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).filter(F.col("session_start") < F.lit(sentinel_ts))
+    return drain_to_memory(out, f"stream_sessions_{_uuid.uuid4().hex[:8]}").filter(
+        F.col("session_start") < F.lit(sentinel_ts)
+    )
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3582,6 +3541,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.streaming import drain_to_memory, stream_parquet
     from rat_strain_loader_pipeline_spark.streaming.events import (
         interval_join_streams,
     )
@@ -3594,38 +3554,18 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _os.path.join(_stage_root(), f"ss-join-src-{_uuid.uuid4().hex[:8]}")
     ev.coalesce(4).write.parquet(src_dir)
     schema = "event_id long, ts timestamp, user_id long, event_type string"
-    clicks = (
-        spark.readStream.schema(schema)
-        .parquet(src_dir)
-        .filter(F.col("event_type") == "click")
+    clicks = stream_parquet(spark, src_dir, schema).filter(
+        F.col("event_type") == "click"
     )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(src_dir)
-        .filter(F.col("event_type") == "purchase")
+    purchases = stream_parquet(spark, src_dir, schema).filter(
+        F.col("event_type") == "purchase"
     )
     out = interval_join_streams(
         clicks, purchases, key="user_id", max_lag_minutes=STREAMJOIN_LAG_MIN
     )
-    name = f"ss_join_{_uuid.uuid4().hex[:8]}"
     # state-store instances = 2 sides x shuffle partitions; sized by the
     # shared scale-adaptive rule (streaming/__init__.py)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
-    )
-
-    with stream_partition_scope(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", _os.path.join(_stage_root(), f"ckpt-{name}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(out, f"ss_join_{_uuid.uuid4().hex[:8]}")
 
 
 def q_wig_fixedstep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4943,6 +4883,7 @@ def q_rate_limit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.streaming import drain_to_memory, stream_parquet
     from rat_strain_loader_pipeline_spark.streaming.events import (
         rate_limit_stateful,
     )
@@ -4950,25 +4891,9 @@ def q_rate_limit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     src_dir = _os.path.join(_stage_root(), f"rate-src-{_uuid.uuid4().hex[:8]}")
     ev.write.parquet(src_dir)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long"
-    ).parquet(src_dir)
+    stream = stream_parquet(spark, src_dir, "event_id long, ts timestamp, user_id long")
     out = rate_limit_stateful(stream, per_hour=RATE_PER_HOUR)
-    name = f"rate_limit_{_uuid.uuid4().hex[:8]}"
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
-    )
-
-    with stream_partition_scope(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _os.path.join(_stage_root(), f"ckpt-{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(out, f"rate_limit_{_uuid.uuid4().hex[:8]}")
 
 
 def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5541,20 +5466,15 @@ def q_cms_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _uuid.uuid4().hex[:8]
     src_dir = _os.path.join(_stage_root(), f"cms-src-{tag}")
     ev.repartition(6).write.parquet(src_dir)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    grid = maintain_cms_available_now(
+        spark,
+        src_dir,
+        "event_id long, user_id long",
+        _os.path.join(_stage_root(), f"cms-work-{tag}"),
+        "user_id",
+        depth=CMS_DEPTH,
+        width=CMS_WIDTH,
     )
-
-    with stream_partition_scope(spark):
-        grid = maintain_cms_available_now(
-            spark,
-            src_dir,
-            "event_id long, user_id long",
-            _os.path.join(_stage_root(), f"cms-work-{tag}"),
-            "user_id",
-            depth=CMS_DEPTH,
-            width=CMS_WIDTH,
-        )
     return count_min_heavy_hitters(
         ev, "user_id", depth=CMS_DEPTH, width=CMS_WIDTH, topn=CMS_TOPN, sketch=grid
     )
@@ -6579,19 +6499,14 @@ def q_media_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     media.filter(F.col("media_id") > mid).coalesce(1).write.parquet(
         _os.path.join(src_dir, "p1")
     )
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return phash_gate_available_now(
+        spark,
+        src_dir + "/p*",
+        work,
+        sig_fn=image_dhash_sigs,
+        n_bits=PHASH_BITS,
+        max_hamming=4,
     )
-
-    with stream_partition_scope(spark):
-        return phash_gate_available_now(
-            spark,
-            src_dir + "/p*",
-            work,
-            sig_fn=image_dhash_sigs,
-            n_bits=PHASH_BITS,
-            max_hamming=4,
-        )
 
 
 def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7553,21 +7468,16 @@ def q_quantile_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _uuid.uuid4().hex[:8]
     src_dir = _os.path.join(_stage_root(), f"hq-src-{tag}")
     ev.repartition(6).write.parquet(src_dir)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    grid = maintain_hist_available_now(
+        spark,
+        src_dir,
+        "event_id long, value double",
+        _os.path.join(_stage_root(), f"hq-work-{tag}"),
+        HQ_VALUE_EXPR,
+        n_bins=HQ_BINS,
+        lo_q=HQ_LO,
+        hi_q=HQ_HI,
     )
-
-    with stream_partition_scope(spark):
-        grid = maintain_hist_available_now(
-            spark,
-            src_dir,
-            "event_id long, value double",
-            _os.path.join(_stage_root(), f"hq-work-{tag}"),
-            HQ_VALUE_EXPR,
-            n_bins=HQ_BINS,
-            lo_q=HQ_LO,
-            hi_q=HQ_HI,
-        )
     return histogram_quantiles(
         grid, list(HQ_QS_MICROS), n_bins=HQ_BINS, lo_q=HQ_LO, hi_q=HQ_HI
     )
@@ -8823,6 +8733,7 @@ def q_events_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.streaming import drain_to_memory
     from rat_strain_loader_pipeline_spark.streaming.events import (
         hourly_distinct_users,
         stream_events,
@@ -8832,25 +8743,13 @@ def q_events_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_root(), f"events-sdist-src-{_uuid.uuid4().hex[:8]}"
     )
     _t(spark, sf_dir, "events").write.parquet(src_dir)
-    ev = stream_events(spark, src_dir)
-    agg = hourly_distinct_users(ev)
-    name = f"stream_distinct_{_uuid.uuid4().hex[:8]}"
     # dedup + windowed-agg state stores scale with shuffle partitions;
     # sized by the shared scale-adaptive rule (streaming/__init__.py)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return drain_to_memory(
+        hourly_distinct_users(stream_events(spark, src_dir)),
+        f"stream_distinct_{_uuid.uuid4().hex[:8]}",
+        "complete",
     )
-
-    with stream_partition_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def q_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9705,20 +9604,15 @@ def q_ivf_pq_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") % 2 == 1).repartition(2).write.parquet(
             src_dir
         )
-        from rat_strain_loader_pipeline_spark.streaming import (
-            stream_partition_scope,
+        merged = ivf_pq_encode_ingest_available_now(
+            spark,
+            src_dir,
+            _ivf_residual_even_index_path(spark, sf_dir),
+            _os.path.join(_stage_root(), f"pqstream-work-{tag}"),
+            dims=EMB_DIMS,
+            m=PQ_M,
+            max_files_per_trigger=1,
         )
-
-        with stream_partition_scope(spark):
-            merged = ivf_pq_encode_ingest_available_now(
-                spark,
-                src_dir,
-                _ivf_residual_even_index_path(spark, sf_dir),
-                _os.path.join(_stage_root(), f"pqstream-work-{tag}"),
-                dims=EMB_DIMS,
-                m=PQ_M,
-                max_files_per_trigger=1,
-            )
         files = merged.inputFiles()
         if files:
             codes_path = files[0].rsplit("/", 1)[0]
@@ -9838,21 +9732,16 @@ def q_weighted_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _uuid.uuid4().hex[:8]
     src_dir = _os.path.join(_stage_root(), f"ws-src-{tag}")
     docs.repartition(3).write.parquet(src_dir)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return maintain_weighted_sample_available_now(
+        spark,
+        src_dir,
+        "doc_id long, n_chars long",
+        _os.path.join(_stage_root(), f"ws-work-{tag}"),
+        weight_col="n_chars",
+        n=25,
+        id_col="doc_id",
+        salt="v1",
     )
-
-    with stream_partition_scope(spark):
-        return maintain_weighted_sample_available_now(
-            spark,
-            src_dir,
-            "doc_id long, n_chars long",
-            _os.path.join(_stage_root(), f"ws-work-{tag}"),
-            weight_col="n_chars",
-            n=25,
-            id_col="doc_id",
-            salt="v1",
-        )
 
 
 _CC_STORE_PATHS: dict[str, tuple[str, str]] = {}
@@ -10102,19 +9991,14 @@ def q_hll_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed.repartition(3).write.parquet(src_dir)
     # per-batch register jobs reduce to <= 2^HLL_P keys — sized by the
     # shared scale-adaptive rule (streaming/__init__.py)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    regs = maintain_hll_available_now(
+        spark,
+        src_dir,
+        "k string",
+        _os.path.join(_stage_root(), f"hll-work-{tag}"),
+        "k",
+        p=HLL_P,
     )
-
-    with stream_partition_scope(spark):
-        regs = maintain_hll_available_now(
-            spark,
-            src_dir,
-            "k string",
-            _os.path.join(_stage_root(), f"hll-work-{tag}"),
-            "k",
-            p=HLL_P,
-        )
     est = hll_estimate(regs, p=HLL_P)
     n_exact = (
         spark.read.parquet(src_dir)
@@ -10411,18 +10295,13 @@ def q_cc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tag = _uuid.uuid4().hex[:8]
         src_dir = _os.path.join(_stage_root(), f"ccstream-src-{tag}")
         docs.select("doc_id", "text").repartition(2).write.parquet(src_dir)
-        from rat_strain_loader_pipeline_spark.streaming import (
-            stream_partition_scope,
+        merged = cc_ingest_available_now(
+            spark,
+            src_dir,
+            _os.path.join(_stage_root(), f"ccstream-work-{tag}"),
+            jaccard_threshold=0.5,
+            max_files_per_trigger=1,
         )
-
-        with stream_partition_scope(spark):
-            merged = cc_ingest_available_now(
-                spark,
-                src_dir,
-                _os.path.join(_stage_root(), f"ccstream-work-{tag}"),
-                jaccard_threshold=0.5,
-                max_files_per_trigger=1,
-            )
         files = merged.inputFiles()
         if files:
             comp_path = files[0].rsplit("/", 1)[0]
@@ -10699,22 +10578,17 @@ def q_group_reservoir_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _uuid.uuid4().hex[:8]
     src_dir = _os.path.join(_stage_root(), f"gres-src-{tag}")
     docs.repartition(3).write.parquet(src_dir)
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
+    return maintain_group_reservoir_available_now(
+        spark,
+        src_dir,
+        "source string, doc_id long, n_chars long",
+        _os.path.join(_stage_root(), f"gres-work-{tag}"),
+        group_col="source",
+        weight_col="n_chars",
+        n_per_group=5,
+        id_col="doc_id",
+        salt="v1",
     )
-
-    with stream_partition_scope(spark):
-        return maintain_group_reservoir_available_now(
-            spark,
-            src_dir,
-            "source string, doc_id long, n_chars long",
-            _os.path.join(_stage_root(), f"gres-work-{tag}"),
-            group_col="source",
-            weight_col="n_chars",
-            n_per_group=5,
-            id_col="doc_id",
-            salt="v1",
-        )
 
 
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:

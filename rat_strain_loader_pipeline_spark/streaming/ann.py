@@ -14,6 +14,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rat_strain_loader_pipeline_spark.streaming import (
+    land_available_now,
+    stream_parquet,
+)
+
+
 def ivf_ingest_available_now(
     spark: SparkSession,
     src_dir: str,
@@ -39,33 +45,12 @@ def ivf_ingest_available_now(
     """
     from rat_strain_loader_pipeline_spark.operators.similarity import ivf_assign
 
-    postings = os.path.join(work_dir, "postings")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: per-batch overwritten partition
-        # so a retried batch replaces rather than duplicates postings
-        ivf_assign(batch_df, centroids, id_col=id_col, vec_col=vec_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(postings, f"batch={batch_id}"))
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-        .start()
+    return land_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        lambda df: ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col),
+        os.path.join(work_dir, "postings"),
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(postings):
-        empty = spark.createDataFrame([], schema)
-        return ivf_assign(empty, centroids, id_col=id_col, vec_col=vec_col)
-    return spark.read.parquet(postings).drop("batch")
 
 
 def ivf_pq_encode_ingest_available_now(
@@ -97,34 +82,11 @@ def ivf_pq_encode_ingest_available_now(
         ivf_pq_encode_batch,
     )
 
-    codes_store = os.path.join(work_dir, "pq-codes")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_pq_encode_batch(
-            spark, index_path, batch_df, dims, m=m,
-            id_col=id_col, vec_col=vec_col,
-        ).write.mode("overwrite").parquet(
-            os.path.join(codes_store, f"batch={batch_id}")
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-        .start()
+    return land_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        lambda df: ivf_pq_encode_batch(
+            spark, index_path, df, dims, m=m, id_col=id_col, vec_col=vec_col
+        ),
+        os.path.join(work_dir, "pq-codes"),
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(codes_store):
-        # Schema must match the non-empty path exactly: ivf_pq_encode_batch
-        # emits int jc/j (kmeans row_number - 1 seeds are Spark ints).
-        return spark.createDataFrame(
-            [], f"{id_col} long, jc int, g int, j int"
-        )
-    return spark.read.parquet(codes_store).drop("batch")

@@ -45,6 +45,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rat_strain_loader_pipeline_spark.streaming import (
+    read_batches,
+    run_available_now,
+    stream_parquet,
+    write_batch,
+)
+
 
 def dedup_gate_available_now(
     spark: SparkSession,
@@ -73,9 +80,6 @@ def dedup_gate_available_now(
 
     sig_store = os.path.join(work_dir, "sigs")
     out_path = os.path.join(work_dir, "out")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
         # The batch's (id, hashes, sig) rows land in the state store
@@ -111,9 +115,7 @@ def dedup_gate_available_now(
                 hashes=bh, hash_fn=hash_fn,
             )
             sigs = bh.join(bs, id_col)
-        part = os.path.join(sig_store, f"batch={batch_id}")
-        sigs.write.mode("overwrite").parquet(part)
-        cur = spark.read.parquet(part)
+        cur = spark.read.parquet(write_batch(sigs, sig_store, batch_id))
 
         bh = cur.select(id_col, "hashes")
         bb = band_signatures(cur.select(id_col, "sig"), id_col, num_hashes, bands)
@@ -166,22 +168,17 @@ def dedup_gate_available_now(
             .join(rejected.withColumn("__rej", F.lit(True)), id_col, "left")
             .select(id_col, F.col("__rej").isNull().alias("admitted"))
         )
-        decisions.write.mode("overwrite").parquet(os.path.join(out_path, f"batch={batch_id}"))
+        write_batch(decisions, out_path, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(gate_batch)
-        .start()
+    run_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        gate_batch,
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(out_path):
-        return spark.createDataFrame([], f"{id_col} long, admitted boolean")
-    return spark.read.parquet(out_path).drop("batch")
+    return read_batches(
+        spark, out_path,
+        lambda: spark.createDataFrame([], f"{id_col} long, admitted boolean"),
+    )
 
 
 def cc_ingest_available_now(
@@ -229,9 +226,6 @@ def cc_ingest_available_now(
     ensure_shipped(spark)
     sig_store = os.path.join(work_dir, "sigs")
     comp_store = os.path.join(work_dir, "components")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
 
     def _max_comp_batch(below: int | None = None) -> int | None:
         """Largest completed component-table batch id on DISK (strictly
@@ -267,9 +261,7 @@ def cc_ingest_available_now(
             F.col("hs.hashes").alias("hashes"),
             F.col("hs.sig").alias("sig"),
         )
-        part = os.path.join(sig_store, f"batch={batch_id}")
-        sigs.write.mode("overwrite").parquet(part)
-        cur = spark.read.parquet(part)
+        cur = spark.read.parquet(write_batch(sigs, sig_store, batch_id))
 
         bh = cur.select(id_col, "hashes")
         bb = band_signatures(cur.select(id_col, "sig"), id_col, num_hashes, bands)
@@ -314,21 +306,13 @@ def cc_ingest_available_now(
                 os.path.join(comp_store, f"batch={prev_batch}")
             )
             merged = connected_components_incremental(prev_comp, pairs)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(comp_store, f"batch={batch_id}")
-        )
+        write_batch(merged, comp_store, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-        .start()
+    run_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        ingest_batch,
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
     last = _max_comp_batch()
     if last is None:
         return spark.createDataFrame([], "node_id long, component_id long")

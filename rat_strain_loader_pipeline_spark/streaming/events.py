@@ -6,7 +6,8 @@ surface for this engine is micro-batch ingest with:
   (the streaming twin of __spark_entry__.q_events_hourly);
 - dedup via dropDuplicatesWithinWatermark on the variant natural key —
   the streaming twin of the J4 upsert's in-batch dedup;
-- the load stage as foreachBatch upsert into the parquet store.
+- stateful sessionizing and rate limiting, a stream-stream interval
+  join, and stream-static as-of enrichment.
 
 All transformations are identical DataFrame expressions to the batch
 path — the queries compile to incremental plans under readStream.
@@ -16,6 +17,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rat_strain_loader_pipeline_spark.streaming import (
+    land_available_now,
+    stream_parquet,
+)
 
 
 def stream_events(
@@ -27,11 +33,8 @@ def stream_events(
     ),
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a directory of parquet/json event files."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    """File-source stream over a directory of parquet event files."""
+    return stream_parquet(spark, path, schema, max_files_per_trigger)
 
 
 def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -168,26 +171,6 @@ def sessionize_stateful(
     )
 
 
-def write_upsert_foreach_batch(stream_df: DataFrame, store_path: str, checkpoint: str, key: list[str]):
-    """Load stage as foreachBatch: per micro-batch anti-join against the
-    store then append — the incremental K2 conditional insert."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(store_path).select(*key).dropDuplicates()
-            fresh = batch_df.join(existing, on=key, how="left_anti")
-        except Exception:
-            fresh = batch_df  # first batch: store does not exist yet
-        fresh.write.mode("append").parquet(store_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
 def asof_enrich_available_now(
     spark: SparkSession,
     src_dir: str,
@@ -216,36 +199,14 @@ def asof_enrich_available_now(
 
     from rat_strain_loader_pipeline_spark.operators.asof import asof_join
 
-    out_path = os.path.join(work_dir, "out")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-
-    def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: land each batch in its own
-        # overwritten partition so a retried batch replaces rather than
-        # duplicates its rows (same pattern as ingest.py)
-        asof_join(
-            batch_df, right, on=on, ts_col=ts_col, payload=payload, tiebreak=tiebreak
-        ).write.mode("overwrite").parquet(os.path.join(out_path, f"batch={batch_id}"))
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(enrich_batch)
-        .start()
+    return land_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        lambda df: asof_join(
+            df, right, on=on, ts_col=ts_col, payload=payload, tiebreak=tiebreak
+        ),
+        os.path.join(work_dir, "out"),
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(out_path):
-        empty = spark.createDataFrame([], schema)
-        return asof_join(
-            empty, right, on=on, ts_col=ts_col, payload=payload, tiebreak=tiebreak
-        )
-    return spark.read.parquet(out_path).drop("batch")
 
 
 def interval_join_streams(

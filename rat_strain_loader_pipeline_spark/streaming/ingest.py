@@ -20,6 +20,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from rat_strain_loader_pipeline_spark.schemas import CF2_SCHEMA
+from rat_strain_loader_pipeline_spark.streaming import (
+    read_batches,
+    run_available_now,
+    write_batch,
+)
 
 _EXISTING_SCHEMA = (
     "rgd_id long, chromosome string, start_pos long, end_pos long, "
@@ -89,26 +94,27 @@ def ingest_cf2_available_now(
 
     store_path = os.path.join(work_dir, "variant")
     out_path = os.path.join(work_dir, "out")
-    checkpoint = os.path.join(work_dir, "checkpoint")
+
+    def derive(cf2: DataFrame) -> DataFrame:
+        # no derive stage barrier: the batch lands exactly once into its
+        # out partition below, so the derive plan has ONE consumer and a
+        # stage write+read round would be pure overhead per batch
+        return derive_variants(
+            cf2, sample_id, gender, map_key,
+            genes=genes, genic_bin_size=genic_bin_size, stage_cache=False,
+        )
 
     def load_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        # no derive stage barrier: the batch lands exactly once into its
-        # out partition below, so the derive plan has ONE consumer and a
-        # stage write+read round would be pure overhead per batch
-        derived = derive_variants(
-            batch_df, sample_id, gender, map_key,
-            genes=genes, genic_bin_size=genic_bin_size, stage_cache=False,
+        with_ids = upsert_variants(
+            derive(batch_df), _read_store_or_empty(spark, store_path)
         )
-        existing = _read_store_or_empty(spark, store_path)
-        with_ids = upsert_variants(derived, existing)
         # land the batch ONCE into its own out partition, then append
         # that batch's NEW keys to the store probe table — both steps
         # are O(batch), never O(store); the one-pipeline-pass land also
         # means the derive/upsert plan executes exactly once per batch
-        batch_out = os.path.join(out_path, f"batch={batch_id}")
-        with_ids.write.mode("overwrite").parquet(batch_out)
+        batch_out = write_batch(with_ids, out_path, batch_id)
         (
             spark.read.parquet(batch_out)
             .filter(F.col("is_new"))
@@ -121,23 +127,18 @@ def ingest_cf2_available_now(
             .parquet(store_path)
         )
 
-    q = (
-        stream_cf2(spark, cf2_dir, max_files_per_trigger)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(load_batch)
-        .start()
+    run_available_now(
+        stream_cf2(spark, cf2_dir, max_files_per_trigger),
+        load_batch,
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(out_path):
-        # zero batches landed (empty input directory): return an empty
-        # frame with the exact batch-output schema — derive+upsert over
-        # empty inputs builds the plan (lazily, no action) and nothing else
-        empty_derived = derive_variants(
-            spark.createDataFrame([], CF2_SCHEMA), sample_id, gender, map_key,
-            genes=genes, genic_bin_size=genic_bin_size, stage_cache=False,
-        )
-        return upsert_variants(
-            empty_derived, spark.createDataFrame([], _EXISTING_SCHEMA)
-        )
-    return spark.read.parquet(out_path)
+    # zero batches landed (empty input directory): derive+upsert over
+    # empty inputs builds the batch-output plan lazily, no action
+    return read_batches(
+        spark,
+        out_path,
+        lambda: upsert_variants(
+            derive(spark.createDataFrame([], CF2_SCHEMA)),
+            spark.createDataFrame([], _EXISTING_SCHEMA),
+        ),
+    )

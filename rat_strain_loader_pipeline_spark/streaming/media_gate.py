@@ -32,6 +32,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rat_strain_loader_pipeline_spark.streaming import (
+    read_batches,
+    run_available_now,
+    stream_parquet,
+    write_batch,
+)
+
 
 def _band_rows(sigs: DataFrame, id_col: str, n_bits: int, bands: int) -> DataFrame:
     """Explode each signature into (id, band, val) pigeonhole rows —
@@ -71,17 +78,12 @@ def phash_gate_available_now(
     audio_spectral_sigs. Returns (id_col, admitted) for every item."""
     sig_store = os.path.join(work_dir, "sigs")
     out_path = os.path.join(work_dir, "out")
-    checkpoint = os.path.join(work_dir, "checkpoint")
     bands = max_hamming + 1
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
         # state-first write; the store copy is the staged input for the
         # probe (same idempotence/retry argument as dedup_gate.py)
-        part = os.path.join(sig_store, f"batch={batch_id}")
-        sig_fn(batch_df).write.mode("overwrite").parquet(part)
-        cur = spark.read.parquet(part)
+        cur = spark.read.parquet(write_batch(sig_fn(batch_df), sig_store, batch_id))
         prev = (
             spark.read.parquet(sig_store)
             .filter(F.col("batch") < batch_id)
@@ -118,21 +120,14 @@ def phash_gate_available_now(
             .join(rejected.withColumn("__rej", F.lit(True)), id_col, "left")
             .select(id_col, F.col("__rej").isNull().alias("admitted"))
         )
-        decisions.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch={batch_id}")
-        )
+        write_batch(decisions, out_path, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(src_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(gate_batch)
-        .start()
+    run_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        gate_batch,
+        os.path.join(work_dir, "checkpoint"),
     )
-    q.awaitTermination()
-    if not os.path.exists(out_path):
-        return spark.createDataFrame([], f"{id_col} long, admitted boolean")
-    return spark.read.parquet(out_path).drop("batch")
+    return read_batches(
+        spark, out_path,
+        lambda: spark.createDataFrame([], f"{id_col} long, admitted boolean"),
+    )

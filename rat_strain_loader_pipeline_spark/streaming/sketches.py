@@ -23,8 +23,36 @@ answers heavy-hitter/degree probes without any key-cardinality state.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from rat_strain_loader_pipeline_spark.streaming import (
+    land_available_now,
+    stream_parquet,
+)
+
+
+def _maintain(
+    spark: SparkSession,
+    src_dir: str,
+    schema: str,
+    work_dir: str,
+    state_name: str,
+    delta: Callable[[DataFrame], DataFrame],
+    max_files_per_trigger: int,
+) -> DataFrame:
+    """The pass every maintainer below shares: land ``delta(batch)`` per
+    micro-batch under ``work_dir/state_name`` and return every landed
+    delta for the maintainer's merge. A delta is bounded by the sketch
+    size at ANY batch size, so it lands as one file, not one per
+    shuffle partition."""
+    return land_available_now(
+        stream_parquet(spark, src_dir, schema, max_files_per_trigger),
+        lambda df: delta(df).coalesce(1),
+        os.path.join(work_dir, state_name),
+        os.path.join(work_dir, "ckpt"),
+    )
 
 
 def _cms_batch_grid(df: DataFrame, key_col: str, depth: int, width: int) -> DataFrame:
@@ -72,34 +100,12 @@ def maintain_cms_available_now(
     rows, by linearity."""
     from pyspark.sql import functions as F
 
-    state_dir = os.path.join(work_dir, "cms-state")
-    ckpt = os.path.join(work_dir, "ckpt")
+    def delta(df: DataFrame) -> DataFrame:
+        return _cms_batch_grid(df, key_col, depth, width)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # deterministic per-batch partition: a replayed batch rewrites
-        # the same delta instead of double-counting it
-        _cms_batch_grid(batch_df, key_col, depth, width).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch={batch_id}"))
-
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("i", "b")
-        .agg(F.sum("cell").alias("cell"))
-    )
+    state = _maintain(spark, src_dir, schema, work_dir, "cms-state", delta,
+                      max_files_per_trigger)
+    return state.groupBy("i", "b").agg(F.sum("cell").alias("cell"))
 
 
 def maintain_weighted_sample_available_now(
@@ -140,31 +146,12 @@ def maintain_weighted_sample_available_now(
         aes_select,
     )
 
-    state_dir = os.path.join(work_dir, "wsample-state")
-    ckpt = os.path.join(work_dir, "ckpt")
+    def delta(df: DataFrame) -> DataFrame:
+        return aes_candidates(df, weight_col, n, id_col, salt)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
-    def sample_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the candidate delta is <= n rows at ANY batch size — one file
-        aes_candidates(batch_df, weight_col, n, id_col, salt).coalesce(
-            1
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch={batch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sample_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return aes_select(spark.read.parquet(state_dir).drop("batch"), n, id_col)
+    state = _maintain(spark, src_dir, schema, work_dir, "wsample-state", delta,
+                      max_files_per_trigger)
+    return aes_select(state, n, id_col)
 
 
 def maintain_hist_available_now(
@@ -191,35 +178,13 @@ def maintain_hist_available_now(
 
     from rat_strain_loader_pipeline_spark.operators.sketch import fixed_histogram
 
-    state_dir = os.path.join(work_dir, "hist-state")
-    ckpt = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def delta(df: DataFrame) -> DataFrame:
         vq = F.expr(value_expr)
-        fixed_histogram(
-            batch_df.filter(vq.isNotNull()), vq, n_bins, lo_q, hi_q
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch={batch_id}")
-        )
+        return fixed_histogram(df.filter(vq.isNotNull()), vq, n_bins, lo_q, hi_q)
 
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("bin")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    state = _maintain(spark, src_dir, schema, work_dir, "hist-state", delta,
+                      max_files_per_trigger)
+    return state.groupBy("bin").agg(F.sum("n").cast("long").alias("n"))
 
 
 def maintain_hll_available_now(
@@ -247,34 +212,12 @@ def maintain_hll_available_now(
 
     from rat_strain_loader_pipeline_spark.operators.sketch import hll_registers
 
-    state_dir = os.path.join(work_dir, "hll-state")
-    ckpt = os.path.join(work_dir, "ckpt")
+    def delta(df: DataFrame) -> DataFrame:
+        return hll_registers(df, key_col, p)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the delta is <= 2^p rows at ANY batch size — one file, not one
-        # per shuffle partition (192 tiny files per replay otherwise)
-        hll_registers(batch_df, key_col, p).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch={batch_id}"))
-
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("i")
-        .agg(F.max("reg").alias("reg"))
-    )
+    state = _maintain(spark, src_dir, schema, work_dir, "hll-state", delta,
+                      max_files_per_trigger)
+    return state.groupBy("i").agg(F.max("reg").alias("reg"))
 
 
 def maintain_group_reservoir_available_now(
@@ -302,29 +245,9 @@ def maintain_group_reservoir_available_now(
         aes_group_select,
     )
 
-    state_dir = os.path.join(work_dir, "gres-state")
-    ckpt = os.path.join(work_dir, "ckpt")
+    def delta(df: DataFrame) -> DataFrame:
+        return aes_group_candidates(df, group_col, weight_col, n_per_group, id_col, salt)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
-    def sample_batch(batch_df: DataFrame, batch_id: int) -> None:
-        aes_group_candidates(
-            batch_df, group_col, weight_col, n_per_group, id_col, salt
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch={batch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sample_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return aes_group_select(
-        spark.read.parquet(state_dir).drop("batch"), group_col, n_per_group, id_col
-    )
+    state = _maintain(spark, src_dir, schema, work_dir, "gres-state", delta,
+                      max_files_per_trigger)
+    return aes_group_select(state, group_col, n_per_group, id_col)

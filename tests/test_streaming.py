@@ -1,18 +1,20 @@
 """Structured Streaming tests: incremental hourly agg matches batch,
-foreachBatch upsert is exactly-once on replayed input."""
+the streaming upsert is exactly-once on replayed input, and every
+availableNow driver survives an empty source."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from rat_strain_loader_pipeline_spark.sources.tables import read_table
+from rat_strain_loader_pipeline_spark.streaming import drain_to_memory
 from rat_strain_loader_pipeline_spark.streaming.events import (
     dedup_within_watermark,
     hourly_event_counts,
     stream_events,
-    write_upsert_foreach_batch,
 )
 
 
@@ -57,29 +59,58 @@ def test_streaming_hourly_matches_batch(spark, tmp_path, sf_dir):
     assert got == expected
 
 
+def _cf2_dir(tmp_path):
+    """Two CF2 files of 16-col rows (CF2_SCHEMA order), one micro-batch
+    each; file b repeats file a's first variant and adds one new key."""
+    def line(pos, ref, var):
+        return f"1\t{pos}\t{ref}\t{var}\trs1\t30\t30\t0\t0\t60\t\t\t30\t2\t30\t"
+
+    cf2_dir = tmp_path / "cf2"
+    cf2_dir.mkdir()
+    (cf2_dir / "a.txt").write_text("\n".join([line(10, "A", "C"), line(20, "A", "C")]) + "\n")
+    (cf2_dir / "b.txt").write_text("\n".join([line(10, "A", "C"), line(30, "C", "A")]) + "\n")
+    return str(cf2_dir)
+
+
 def test_streaming_dedup_and_upsert(spark, tmp_path, sf_dir):
+    """Watermark dedup keeps every distinct event once, and the streaming
+    CF2 upsert replayed with a FRESH checkpoint leaves the variant store
+    exactly as it was: the store probe marks every replayed key as
+    already stored, so nothing is appended twice."""
+    import shutil
+
+    from rat_strain_loader_pipeline_spark.streaming.ingest import (
+        ingest_cf2_available_now,
+    )
+
     path, batch_src = _events_dir(spark, tmp_path, sf_dir)
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt2")
-
-    stream = dedup_within_watermark(stream_events(spark, path), ["event_id"])
-    q = write_upsert_foreach_batch(stream, store, ckpt, ["event_id"]).start()
-    q.awaitTermination(120)
-
-    n_src = batch_src.count()
-    n_store = spark.read.parquet(store).count()
-    assert n_store == n_src
-
-    # replay the same input with a FRESH checkpoint: anti-join keeps the
-    # store exactly-once
-    q2 = write_upsert_foreach_batch(
+    deduped = drain_to_memory(
         dedup_within_watermark(stream_events(spark, path), ["event_id"]),
-        store,
-        str(tmp_path / "ckpt3"),
-        ["event_id"],
-    ).start()
-    q2.awaitTermination(120)
-    assert spark.read.parquet(store).count() == n_src
+        "dedup_test",
+    )
+    assert deduped.count() == batch_src.count()
+
+    cf2_dir = _cf2_dir(tmp_path)
+    work = tmp_path / "work"
+
+    def store_rows():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(work / "variant")).select(
+                "chromosome", "start_pos", "end_pos", "ref_nuc", "var_nuc"
+            ).collect()
+        )
+
+    def ingest():
+        ingest_cf2_available_now(
+            spark, cf2_dir, str(work), sample_id=7, gender="F", map_key=360,
+        )
+
+    ingest()
+    first = store_rows()
+    assert [r[1] for r in first] == [10, 20, 30]
+    shutil.rmtree(str(work / "checkpoint"))  # replay everything
+    ingest()
+    assert store_rows() == first
 
 
 def test_stateful_sessionize(spark, tmp_path):
@@ -137,20 +168,8 @@ def test_cf2_ingest_incremental_upsert(spark, tmp_path):
         ingest_cf2_available_now,
     )
 
-    # 16-col CF2 rows (CF2_SCHEMA order); file b repeats file a's first
-    # variant and adds one new key
-    def line(pos, ref, var):
-        return (
-            f"1\t{pos}\t{ref}\t{var}\trs1\t30\t30\t0\t0\t60\t\t\t30\t2\t30\t"
-        )
-
-    cf2_dir = tmp_path / "cf2"
-    cf2_dir.mkdir()
-    (cf2_dir / "a.txt").write_text("\n".join([line(10, "A", "C"), line(20, "A", "C")]) + "\n")
-    (cf2_dir / "b.txt").write_text("\n".join([line(10, "A", "C"), line(30, "C", "A")]) + "\n")
-
     out = ingest_cf2_available_now(
-        spark, str(cf2_dir), str(tmp_path / "work"),
+        spark, _cf2_dir(tmp_path), str(tmp_path / "work"),
         sample_id=7, gender="F", map_key=360,
     )
     rows = out.select("rgd_id", "start_pos", "is_new").collect()
@@ -164,25 +183,6 @@ def test_cf2_ingest_incremental_upsert(spark, tmp_path):
     # three distinct ids total, no collisions
     all_ids = {i for pairs in by_pos.values() for i, _ in pairs}
     assert len(all_ids) == 3
-
-
-def test_cf2_ingest_empty_input_dir(spark, tmp_path):
-    """Zero input files → zero batches → the ingest returns an EMPTY
-    frame with the batch-output schema instead of raising on a missing
-    out/ path."""
-    from rat_strain_loader_pipeline_spark.streaming.ingest import (
-        ingest_cf2_available_now,
-    )
-
-    cf2_dir = tmp_path / "cf2"
-    cf2_dir.mkdir()
-    out = ingest_cf2_available_now(
-        spark, str(cf2_dir), str(tmp_path / "work"),
-        sample_id=7, gender="F", map_key=360,
-    )
-    assert out.count() == 0
-    for col in ("rgd_id", "is_new", "chromosome", "start_pos"):
-        assert col in out.columns
 
 
 def test_cf2_ingest_corrupt_store_propagates(spark, tmp_path):
@@ -690,3 +690,121 @@ def test_ivf_pq_encode_ingest_batch_split_invariant(spark, sf_dir, tmp_path):
         got = sorted(tuple(r) for r in merged.collect())
         assert got == oneshot, f"split {trig}"
     assert len(oneshot) == odd.count() * 3  # 1 route + m=2 code rows
+
+
+# -- every availableNow driver on an empty source ---------------------------
+
+
+def _ts(minute):
+    import datetime as dt
+
+    return dt.datetime(2024, 1, 1) + dt.timedelta(minutes=minute)
+
+
+def _run_driver(driver, spark, sf_dir, src, schema, work):
+    """One call of the named driver over ``src`` (the cf2 driver streams
+    CSV and takes no schema)."""
+    import numpy as np
+
+    import __spark_entry__ as em
+    from rat_strain_loader_pipeline_spark.streaming import (
+        ann,
+        dedup_gate,
+        events,
+        ingest,
+        media_gate,
+        sketches,
+    )
+
+    if driver == "cms":
+        return sketches.maintain_cms_available_now(spark, src, schema, work, "k", depth=2, width=8)
+    if driver == "weighted_sample":
+        return sketches.maintain_weighted_sample_available_now(
+            spark, src, schema, work, weight_col="n_chars", n=1
+        )
+    if driver == "hist":
+        return sketches.maintain_hist_available_now(
+            spark, src, schema, work, "CAST(value AS BIGINT)", n_bins=4, lo_q=0, hi_q=8
+        )
+    if driver == "hll":
+        return sketches.maintain_hll_available_now(spark, src, schema, work, "k", p=4)
+    if driver == "group_reservoir":
+        return sketches.maintain_group_reservoir_available_now(
+            spark, src, schema, work, group_col="source", weight_col="n_chars", n_per_group=1
+        )
+    if driver == "ivf":
+        return ann.ivf_ingest_available_now(spark, src, np.eye(2), work, schema=schema)
+    if driver == "ivf_pq":
+        return ann.ivf_pq_encode_ingest_available_now(
+            spark, src, em._ivf_residual_even_index_path(spark, sf_dir), work,
+            dims=64, m=2, schema=schema,
+        )
+    if driver == "dedup_gate":
+        return dedup_gate.dedup_gate_available_now(spark, src, work, schema=schema)
+    if driver == "cc":
+        return dedup_gate.cc_ingest_available_now(spark, src, work, schema=schema)
+    if driver == "phash":
+        return media_gate.phash_gate_available_now(
+            spark, src, work, sig_fn=lambda df: df.withColumnRenamed("h", "simhash"),
+            n_bits=16, max_hamming=2, schema=schema,
+        )
+    if driver == "cf2":
+        return ingest.ingest_cf2_available_now(
+            spark, src, work, sample_id=7, gender="F", map_key=360
+        )
+    assert driver == "asof"
+    clicks = spark.createDataFrame(
+        [(100, 1, _ts(0), 1.0)], "event_id long, user_id long, ts timestamp, value double"
+    )
+    return events.asof_enrich_available_now(
+        spark, src, clicks, on=["user_id"], ts_col="ts",
+        payload={"event_id": "m_id", "value": "m_value"}, tiebreak="event_id",
+        work_dir=work, schema=schema,
+    )
+
+
+_DOCS = [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta zeta")]
+_VECS = [(1, [1.0, 0.0]), (2, [0.0, 1.0])]
+# driver -> (source schema, a few source rows); the cf2 and ivf_pq sources
+# are built in the test instead
+_DRIVER_SOURCES = {
+    "cms": ("k string", [("a",), ("b",)]),
+    "weighted_sample": ("doc_id long, n_chars long", [(1, 5), (2, 7)]),
+    "hist": ("value double", [(1.0,), (5.0,)]),
+    "hll": ("k string", [("a",), ("b",)]),
+    "group_reservoir": ("source string, doc_id long, n_chars long", [("x", 1, 5), ("y", 2, 7)]),
+    "ivf": ("vec_id long, embedding array<double>", _VECS),
+    "ivf_pq": ("vec_id long, embedding array<double>", None),
+    "dedup_gate": ("doc_id long, text string", _DOCS),
+    "cc": ("doc_id long, text string", _DOCS),
+    "phash": ("media_id long, h long", [(1, 3), (2, 7)]),
+    "cf2": (None, None),
+    "asof": ("event_id long, user_id long, ts timestamp", [(1, 1, _ts(5))]),
+}
+
+
+@pytest.mark.parametrize("driver", sorted(_DRIVER_SOURCES))
+def test_available_now_driver_empty_source(spark, tmp_path, sf_dir, driver):
+    """Zero files in the source directory means zero micro-batches; every
+    driver must still return a zero-row frame typed like its result on
+    a non-empty source, never a missing-path error."""
+    schema, rows = _DRIVER_SOURCES[driver]
+    empty_src = tmp_path / "empty"
+    empty_src.mkdir()
+    empty = _run_driver(driver, spark, sf_dir, str(empty_src), schema, str(tmp_path / "w0"))
+
+    if driver == "cf2":
+        src = _cf2_dir(tmp_path)
+    elif driver == "ivf_pq":
+        src = str(tmp_path / "src")
+        read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 4).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        ).write.parquet(src)
+    else:
+        src = str(tmp_path / "src")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    full = _run_driver(driver, spark, sf_dir, src, schema, str(tmp_path / "w1"))
+
+    assert empty.count() == 0
+    assert full.count() > 0
+    assert empty.dtypes == full.dtypes
