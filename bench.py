@@ -23,6 +23,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# first-run timings fold one-time plan compilation (and any GC/host
+# noise burst) into the query's number; queries slower than this many
+# seconds are re-run and the min kept, so the recorded figure is
+# steady-state query cost
+RETRY_ABOVE = 4.0
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,10 +43,94 @@ def main() -> None:
     queries = entry_mod.queries()
     timings: dict[str, float] = {}
 
-    # warm the JVM/session on a trivial action so the first query doesn't
-    # pay session startup, and lay out the tables once (read_table
-    # restages dense single-split files into parallel multi-file form —
-    # a one-time storage-layout cost, like table loading in any engine)
+    warmup_store_sec = warm_session(spark, sf_dir)
+
+    # host-speed canary: this sandbox's effective CPU speed swings ~2x
+    # between phases (measured: the same query, same code, 6.7 s vs
+    # 3.9 s ten minutes apart). A fixed JVM-side job timed 3x (median)
+    # anchors what the host was doing during THIS bench so two
+    # BENCH_FULL files are comparable.
+    canary = []
+    for _ in range(3):
+        c0 = time.perf_counter()
+        spark.range(200_000_000).selectExpr("sum(id * 3 + 1)").collect()
+        canary.append(time.perf_counter() - c0)
+    host_canary = round(sorted(canary)[1], 3)
+
+    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1")))
+    t_total = time.perf_counter()
+
+    def _time_once(name, fn):
+        t0 = time.perf_counter()
+        try:
+            df = fn(spark, sf_dir)
+            df.count()
+            return time.perf_counter() - t0
+        except Exception as e:
+            print(f"bench error in {name}: {e}", file=sys.stderr)
+            return None
+
+    for name, fn in queries.items():
+        best = None
+        for _run in range(runs):
+            elapsed = _time_once(name, fn)
+            if elapsed is None:
+                break
+            best = elapsed if best is None else min(best, elapsed)
+        # shared-host noise can hit the same query repeatedly (observed
+        # 14x spikes on a 0.9 s query): retry outliers up to twice
+        retries = 0
+        while best is not None and best > RETRY_ABOVE and retries < 2:
+            again = _time_once(name, fn)
+            if again is None:
+                break
+            best = min(best, again)
+            retries += 1
+        timings[name] = round(best, 3) if best is not None else -1.0
+    # headline = sum of recorded per-query times: the retry pass above
+    # must not double-count its outliers into the total
+    total = round(sum(t for t in timings.values() if t > 0), 3)
+    wall = round(time.perf_counter() - t_total, 3)
+
+    payload = {
+        "metric": "total_query_wall_seconds",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "bench_wall_seconds": wall,
+        # measurement conditions, so a committed BENCH_FULL and a
+        # driver run can never silently disagree on what was measured
+        "bench_runs": runs,
+        "retry_above": RETRY_ABOVE,
+        "host_canary_sec": host_canary,
+        # per-store warmup build seconds: the cost excluded from the
+        # per-query figures, kept visible (round-12 verdict item 5)
+        "warmup_store_sec": warmup_store_sec,
+    }
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+    with open(full_path, "w") as f:
+        json.dump(payload, f, indent=1)
+
+    line = json.dumps(payload, separators=(",", ":"))
+    if len(line) > 1800:  # driver tail window safety: keep the line short
+        slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+        payload = {**payload, "queries": slowest, "n_queries": len(timings),
+                   "queries_file": "BENCH_FULL.json"}
+        line = json.dumps(payload, separators=(",", ":"))
+    print(line)
+
+
+def warm_session(spark, sf_dir: str) -> dict[str, float | dict[str, str]]:
+    """The session warmup every timing harness runs before its first
+    query; returns each warmup store's build seconds.
+
+    Warms the JVM/session on a trivial action so the first query doesn't
+    pay session startup, and lays out the tables once (read_table
+    restages dense single-split files into parallel multi-file form — a
+    one-time storage-layout cost, like table loading in any engine)."""
+    import __spark_entry__ as entry_mod
+
     spark.range(1).count()
     from rat_strain_loader_pipeline_spark.sources.tables import read_table
 
@@ -72,18 +162,18 @@ def main() -> None:
     # and maintenance queries measured below never pay it; without
     # this, whichever query touches an artifact first in a fresh
     # process absorbs its whole training cost into a measurement that
-    # is supposed to be O(serve) or O(new batch) (the round-11
-    # ivf_pq_reindex_drifted budget breach). Training is deterministic,
-    # so pre-staging changes no value anywhere.
+    # is supposed to be O(serve) or O(new batch) (as
+    # ivf_pq_reindex_drifted once did). Training is deterministic, so
+    # pre-staging changes no value anywhere.
     # The same lifecycle argument covers every build-once model/state
     # store the serve-side queries read: the LSH postings + component
     # tables (maintained at ingest by the dedup gate / cc_incremental),
     # the shared kmeans assignment, and the trained tokenizer models
     # (BPE merge table + vocab, unigram model). Builds are
     # deterministic, so pre-staging changes no value anywhere.
-    # Membership rule (round-12 verdict): only state maintained by a
-    # declared ingest/build operator may be pre-staged, the list lives in
-    # __spark_entry__.WARMUP_STORES (shared with tools/time_queries.py),
+    # Membership rule: only state maintained by a
+    # declared ingest/build operator may be pre-staged; each such store
+    # is marked @_warmup in __spark_entry__ (which builds WARMUP_STORES),
     # and every build is TIMED so the warmup cost is itself visible in
     # the payload (warmup_store_sec).
     # A store whose build failed is recorded as {"error": ...}, so the
@@ -97,85 +187,7 @@ def main() -> None:
         except Exception as e:  # never let warmup kill the bench
             print(f"bench warmup {warm}: {e}", file=sys.stderr)
             warmup_store_sec[warm] = {"error": str(e)}
-
-    # host-speed canary: this sandbox's effective CPU speed swings ~2x
-    # between phases (measured: the same query, same code, 6.7 s vs
-    # 3.9 s ten minutes apart). A fixed JVM-side job timed 3x (median)
-    # anchors what the host was doing during THIS bench so two
-    # BENCH_FULL files are comparable.
-    canary = []
-    for _ in range(3):
-        c0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr("sum(id * 3 + 1)").collect()
-        canary.append(time.perf_counter() - c0)
-    host_canary = round(sorted(canary)[1], 3)
-
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1")))
-    # first-run timings fold one-time plan compilation (and any GC/host
-    # noise burst) into the query's number; re-run outliers once and
-    # take the min so the recorded figure is steady-state query cost
-    retry_above = float(os.environ.get("SPARK_GRAFT_BENCH_RETRY_ABOVE", "4.0"))
-    t_total = time.perf_counter()
-
-    def _time_once(name, fn):
-        t0 = time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-            df.count()
-            return time.perf_counter() - t0
-        except Exception as e:
-            print(f"bench error in {name}: {e}", file=sys.stderr)
-            return None
-
-    for name, fn in queries.items():
-        best = None
-        for _run in range(runs):
-            elapsed = _time_once(name, fn)
-            if elapsed is None:
-                break
-            best = elapsed if best is None else min(best, elapsed)
-        # shared-host noise can hit the same query repeatedly (observed
-        # 14x spikes on a 0.9 s query): retry outliers up to twice
-        retries = 0
-        while best is not None and best > retry_above and retries < 2:
-            again = _time_once(name, fn)
-            if again is None:
-                break
-            best = min(best, again)
-            retries += 1
-        timings[name] = round(best, 3) if best is not None else -1.0
-    # headline = sum of recorded per-query times: the retry pass above
-    # must not double-count its outliers into the total
-    total = round(sum(t for t in timings.values() if t > 0), 3)
-    wall = round(time.perf_counter() - t_total, 3)
-
-    payload = {
-        "metric": "total_query_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "bench_wall_seconds": wall,
-        # measurement conditions, so a committed BENCH_FULL and a
-        # driver run can never silently disagree on what was measured
-        "bench_runs": runs,
-        "retry_above": retry_above,
-        "host_canary_sec": host_canary,
-        # per-store warmup build seconds: the cost excluded from the
-        # per-query figures, kept visible (round-12 verdict item 5)
-        "warmup_store_sec": warmup_store_sec,
-    }
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
-    with open(full_path, "w") as f:
-        json.dump(payload, f, indent=1)
-
-    line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > 1800:  # driver tail window safety: keep the line short
-        slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-        payload = {**payload, "queries": slowest, "n_queries": len(timings),
-                   "queries_file": "BENCH_FULL.json"}
-        line = json.dumps(payload, separators=(",", ":"))
-    print(line)
+    return warmup_store_sec
 
 
 if __name__ == "__main__":

@@ -24,6 +24,8 @@ reduction. Nothing corpus-sized is collected or broadcast.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -562,7 +564,7 @@ def pq_index_build(
     d, rem = divmod(dims, m)
     if rem:
         raise ValueError(f"dims={dims} not divisible by m={m}")
-    root = root or os.environ.get("SPARK_GRAFT_INDEX_DIR") or _stage_root()
+    root = root or _stage_root()
     layout = "-opq" if opq else ""
     slug = f"pqx-d{dims}-m{m}k{k}i{iters}{layout}-{tag}"
     path = os.path.join(root, slug)
@@ -687,9 +689,9 @@ def pq_codes_serve(
     independence makes the fused IVF artifact's g >= 0 slice
     bit-identical to the per-slice hermetic ``pq_codes`` at the same
     constants (pytest-pinned), so values and the oracle are unchanged.
-    Raises a clear error on a pre-dist legacy artifact (external
-    ``SPARK_GRAFT_INDEX_DIR`` only — per-process staging always
-    rebuilds fresh)."""
+    Raises a clear error on a pre-dist legacy artifact (only reachable
+    through a caller-supplied ``root=`` — the per-process stage root
+    always holds fresh builds)."""
     import os
 
     codes = spark.read.parquet(os.path.join(index_path, "codes")).filter(
@@ -1094,7 +1096,7 @@ def _residual_search(
 
 
 def ivf_pq_residual_index_build(
-    corpus: DataFrame,
+    corpus: Callable[[], DataFrame],
     dims: int,
     coarse_k: int = 8,
     coarse_iters: int = 2,
@@ -1129,7 +1131,9 @@ def ivf_pq_residual_index_build(
     artifact). Training is deterministic, so serving from the artifact
     is bit-identical to the hermetic ``ivf_pq_topk_residual`` — the
     memoization removes repeated per-query training cost without
-    changing any value."""
+    changing any value. ``corpus`` is a zero-arg loader, called only
+    when the artifact is missing, so loading a built index reads no
+    data."""
     import os
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
@@ -1137,7 +1141,7 @@ def ivf_pq_residual_index_build(
     d, rem = divmod(dims, m)
     if rem:
         raise ValueError(f"dims={dims} not divisible by m={m}")
-    root = root or os.environ.get("SPARK_GRAFT_INDEX_DIR") or _stage_root()
+    root = root or _stage_root()
     layout = "-opq" if opq else ""
     slug = (
         f"ivfpqr-d{dims}-c{coarse_k}x{coarse_iters}-m{m}k{k}i{iters}{layout}-{tag}"
@@ -1146,7 +1150,7 @@ def ivf_pq_residual_index_build(
     if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
         return path
     lists, coarse_cent, codes, codebook, dim_map = _residual_index_train(
-        corpus, d, coarse_k, coarse_iters, k, iters, id_col, vec_col,
+        corpus(), d, coarse_k, coarse_iters, k, iters, id_col, vec_col,
         opq_m=m if opq else None,
     )
     if dim_map is not None:
@@ -1276,7 +1280,7 @@ def _validate_dim_map(dim_map: DataFrame, dims: int) -> None:
 
 
 def ivf_pq_index_build(
-    corpus: DataFrame,
+    corpus: Callable[[], DataFrame],
     dims: int,
     coarse_k: int = 8,
     coarse_iters: int = 2,
@@ -1287,7 +1291,7 @@ def ivf_pq_index_build(
     vec_col: str = "embedding",
     root: str | None = None,
     tag: str = "default",
-    dim_map: DataFrame | None = None,
+    dim_map: Callable[[], DataFrame] | None = None,
 ) -> str:
     """BUILD half of the IVF-PQ lifecycle: train the coarse quantizer
     and the m PQ codebooks (one fused ``kmeans_fit_grouped`` run — the
@@ -1312,6 +1316,10 @@ def ivf_pq_index_build(
     whole point of the build/serve split (``ivf_pq_topk`` retrains per
     query batch; a 100 TB serving tier never does). Returns the index
     path for ``ivf_pq_serve_topk`` / ``ivf_pq_index_summary``.
+    ``corpus`` and ``dim_map`` are zero-arg loaders, called only when
+    the artifact is missing, so loading a built index reads no data;
+    the dim map is validated and trained on as read back from the
+    artifact, so it is computed once.
     """
     import os
 
@@ -1328,7 +1336,7 @@ def ivf_pq_index_build(
             "fused grouped training requires coarse (k, iters) == PQ (k, iters); "
             f"got {(coarse_k, coarse_iters)} != {(k, iters)}"
         )
-    root = root or os.environ.get("SPARK_GRAFT_INDEX_DIR") or _stage_root()
+    root = root or _stage_root()
     # The dim_map presence is part of the artifact identity: an OPQ
     # build and a raw build at the same params/tag must never share a
     # path, or the load-or-build check would serve codes with the
@@ -1344,11 +1352,13 @@ def ivf_pq_index_build(
                 f"(stored={has_map}, requested={dim_map is not None})"
             )
         return path
+    corpus = corpus()
     if dim_map is not None:
-        _validate_dim_map(dim_map, dims)
-        dim_map.select("dim", "g").write.mode("overwrite").parquet(
+        dim_map().select("dim", "g").write.mode("overwrite").parquet(
             os.path.join(path, "dim_map")
         )
+        dim_map = corpus.sparkSession.read.parquet(os.path.join(path, "dim_map"))
+        _validate_dim_map(dim_map, dims)
     assign, cent = kmeans_fit_grouped(
         _grouped_query_explode(corpus, id_col, d, id_col, vec_col, dim_map),
         k=k,
@@ -2419,8 +2429,8 @@ def ivf_pq_maintenance_apply(
 def ivf_pq_maintained_commit(
     spark,
     index_path: str,
-    old_corpus: DataFrame,
-    new_batch: DataFrame,
+    old_corpus: Callable[[], DataFrame],
+    new_batch: Callable[[], DataFrame],
     dims: int,
     m: int = 2,
     k: int = 8,
@@ -2456,7 +2466,8 @@ def ivf_pq_maintained_commit(
     Idempotent load-or-build under the params-slugged path. The
     content is exactly what ``ivf_pq_maintenance_apply`` fingerprints
     (same ``_maintenance_apply_state``), so the apply manifest IS this
-    artifact's oracle surface."""
+    artifact's oracle surface. ``old_corpus`` and ``new_batch`` are
+    zero-arg loaders, called only when the artifact is missing."""
     import os
 
     from rat_strain_loader_pipeline_spark.staging import _stage_root
@@ -2464,7 +2475,7 @@ def ivf_pq_maintained_commit(
     d, rem = divmod(dims, m)
     if rem:
         raise ValueError(f"dims={dims} not divisible by m={m}")
-    root = root or os.environ.get("SPARK_GRAFT_INDEX_DIR") or _stage_root()
+    root = root or _stage_root()
     slug = (
         f"ivfpqm-d{dims}-m{m}k{k}i{iters}"
         f"-dq{drift_threshold_q}sq{stale_ratio_q}fp{fp_mod}-{tag}"
@@ -2473,7 +2484,7 @@ def ivf_pq_maintained_commit(
     if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
         return path
     st = _maintenance_apply_state(
-        spark, index_path, old_corpus, new_batch, dims, m, k, iters,
+        spark, index_path, old_corpus(), new_batch(), dims, m, k, iters,
         drift_threshold_q, stale_ratio_q, id_col, vec_col,
     )
     st["cent_final"].select(

@@ -15,10 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from rat_strain_loader_pipeline_spark.staging import build_once
+
 # Tables whose single-file scan is worth spreading (see read_table).
 _SPREAD_MIN_BYTES = 512 * 1024
-# (applicationId, sf_dir, name) -> staged multi-file path
-_SPREAD_CACHE: dict[tuple[str, str, str], str] = {}
 
 
 def _spread(spark: SparkSession, path: str, name: str, df: DataFrame) -> DataFrame:
@@ -42,15 +42,12 @@ def _spread(spark: SparkSession, path: str, name: str, df: DataFrame) -> DataFra
     target = spark.sparkContext.defaultParallelism
     if size < _SPREAD_MIN_BYTES or max(1, -(-size // max_split)) >= target:
         return df
-    key = (spark.sparkContext.applicationId, os.path.dirname(path), name)
-    staged = _SPREAD_CACHE.get(key)
-    if staged is None:
-        from rat_strain_loader_pipeline_spark.staging import _stage_root
-
-        staged = os.path.join(_stage_root(), f"spread-{name}-{len(_SPREAD_CACHE)}")
-        df.repartition(target).write.mode("overwrite").parquet(staged)
-        _SPREAD_CACHE[key] = staged
-    return spark.read.parquet(staged)
+    return build_once(
+        spark,
+        f"spread-{name}",
+        (spark.sparkContext.applicationId, os.path.dirname(path)),
+        lambda: df.repartition(target),
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
